@@ -191,31 +191,6 @@ class CrawlConfig:
     # scan of the fetch table (html never read). False = metadata
     # stages run after the GET, links already extracted.
     head_before_get: bool = False
-    # robots physical strategy: True collects+broadcasts the per-host
-    # rule lists once and matches in a zero-shuffle pandas UDF; False
-    # keeps rules distributed and filters via the robots_rules
-    # dim-table join (the path for rule sets too big to broadcast).
-    # None (default) picks automatically: broadcast while the rule dim
-    # is driver-safe (<= robots_broadcast_max_rules rows), join beyond
-    # — so a 10^7-host crawl never collects O(hosts) to the driver.
-    robots_broadcast: bool | None = None
-    robots_broadcast_max_rules: int = 200_000
-    # baseline physical strategy (same auto pattern): baseline
-    # projections (recrawl schedule, HEAD meta checksum) are broadcast
-    # into their joins only while the baseline ledger is counted below
-    # this cap; beyond it — the baseline is O(prior crawl), unbounded —
-    # the joins go unhinted and Catalyst/AQE pick the strategy.
-    baseline_broadcast_max_rows: int = 2_000_000
-    # host-keyed dim physical strategy (same auto pattern): the
-    # politeness host_state / crawl-delay dims and the stay-on-sitemap
-    # presence dim are O(distinct hosts ever seen) — 10^7-10^8 rows at
-    # the 10^10-URL tier, an OOM as a forced broadcast. They are
-    # broadcast only while a capped count says the dim is driver-safe;
-    # beyond the cap the joins go unhinted (Catalyst/AQE pick
-    # shuffle-hash / sort-merge). host_state grows monotonically, so
-    # its verdict is a ratchet: re-checked per superstep while small,
-    # permanently large once over the cap.
-    host_dim_broadcast_max_rows: int = 2_000_000
     # reference-trail variant marking (ProcessFinalize.java:205-219):
     # record pre-normalization raw spellings on the winning ledger row
     # (raw_variants column). The URL-seen set keys on the normalized
@@ -229,7 +204,6 @@ class CrawlConfig:
     # the engine/oracle.
     use_sitemaps: bool = False
     # engine-side knobs (no semantic effect):
-    shuffle_partitions: int | None = None
     bloom_prefilter_min_ledger: int = 100_000
     # TOTAL filter bits. bloom_shards=0 keeps the driver-held bitmap
     # (fine while bits fit driver memory; it self-monitors fill and

@@ -129,9 +129,9 @@ def schedule_hosts(
     ``host_state``: (scope_key, last_sched_ms) carried
     across supersteps (None on the first). Both dims are O(distinct
     hosts): ``delays_broadcast``/``state_broadcast`` force the
-    broadcast hint only while the caller's counted strategy says the
-    dim is driver-safe (CrawlEngine ratchets host_state per superstep
-    against ``host_dim_broadcast_max_rows``); when False the join goes
+    broadcast hint only while the caller says the dim is driver-safe
+    (CrawlEngine checks both against ``BROADCAST_MAX_ROWS``, host_state
+    through its ledger-size bound); when False the join goes
     unhinted and Catalyst/AQE pick shuffle-hash/sort-merge — at the
     10^10-URL tier a forced O(hosts) broadcast is an OOM, not a plan
     choice. ``schedules``/``patterns``:

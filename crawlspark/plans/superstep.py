@@ -39,13 +39,13 @@ Superstep dataflow (all declarative; Catalyst/AQE plan it):
   commit  = ONE level part + host-state snapshot + documents part +
             checkpoint manifest (atomic swap last)
 
-*The fetch slot has two implementations: ``fetcher`` — a mapInPandas
-transform resolving each URL in the fetch task itself (zero shuffle;
-the real async-HTTP fetcher with per-fetcher retries,
-MultiFetcher.java:94-138, drops into exactly this shape — see
-``webgen.make_fetcher`` for the synthetic one) — or a LEFT JOIN
-against a materialized ``pages`` table (FIXTURES.md §1, the
-MockWebsite analog) for arbitrary test fixtures.
+*The fetch slot has two implementations: ``fetcher`` — a per-batch
+generator (pandas frames with ``url`` in, response columns out)
+resolving each URL in the fetch task itself (zero shuffle; the real
+async-HTTP fetcher with per-fetcher retries, MultiFetcher.java:94-138,
+is exactly this shape — see ``webgen.make_fetcher`` for the synthetic
+one) — or a LEFT JOIN against a materialized ``pages`` table
+(FIXTURES.md §1, the MockWebsite analog) for arbitrary test fixtures.
 
 Scale/efficiency notes:
 
@@ -72,13 +72,15 @@ Scale/efficiency notes:
   clustering width: those shuffles carry highly-compressible slim rows
   that AQE would coalesce into one partition, serializing the Python
   stages downstream (politeness -> fetch -> parse).
-* Robots matching defaults to a broadcast of the per-host rule lists
-  applied in a zero-shuffle pandas UDF (same ``RobotsMatcher`` as the
-  oracle); the ``robots_rules`` dim-table join remains for rule sets
-  too large to broadcast (``CrawlConfig.robots_broadcast=False``).
-* Fetch and parse are FUSED into one ``mapInPandas`` pass when the
-  fetcher exposes its generator form: page bodies are parsed in the
-  Python worker that fetched them and never serialize to the JVM.
+* Robots matching is a broadcast of the per-host rule lists applied
+  in a zero-shuffle pandas UDF (same ``RobotsMatcher`` as the oracle).
+* Join strategy is the engine's: a host- or URL-keyed dim (baseline,
+  crawl delays, politeness host state, sitemap presence) is broadcast
+  only while it holds at most ``BROADCAST_MAX_ROWS`` rows; beyond
+  that its join goes unhinted and Catalyst/AQE pick the strategy.
+* Fetch and parse are FUSED into one ``mapInPandas`` pass with the
+  fetcher's generator: page bodies are parsed in the Python worker
+  that fetched them and never serialize to the JVM.
 * No collect() ever holds row data on the driver — only per-partition
   counts, metric dicts, and the Bloom bitmap. Run metrics live in the
   checkpoint manifest (driver json), not in Spark jobs.
@@ -88,7 +90,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 from dataclasses import dataclass
 from typing import Callable
 
@@ -112,12 +113,9 @@ from ..operators.robots_filter import (
     build_robots_rules,
     host_delays,
     make_robots_verdict_udf,
-    robots_verdict,
 )
 from ..sources.docgen import make_document_udf
 from .ledger import AppendTable, SnapshotTable
-
-_TIMING = os.environ.get("CRAWLSPARK_TIMING", "") == "1"
 
 # target rows per shuffle task when sizing a superstep's shuffles; the
 # per-row work (politeness numpy, regex link extraction, md5) makes a
@@ -130,24 +128,9 @@ AQE_MIN_ROWS = 100_000
 # below this many candidates, seq assignment single-task sorts instead
 # of range-partitioning (saves the sampling + count jobs).
 SMALL_SEQ_ROWS = 150_000
-
-
-class _Tick:
-    """Opt-in per-phase wall timing (CRAWLSPARK_TIMING=1)."""
-
-    def __init__(self, superstep: int):
-        self.superstep = superstep
-        self.t = time.time()
-
-    def __call__(self, phase: str) -> None:
-        if _TIMING:
-            now = time.time()
-            print(
-                f"[timing] ss={self.superstep} {phase}: {now - self.t:.2f}s"
-                f" (abs={now:.2f})",
-                flush=True,
-            )
-            self.t = now
+# a dim joined into the crawl is broadcast while it holds at most this
+# many rows; beyond it the join goes unhinted (see _broadcastable)
+BROADCAST_MAX_ROWS = 2_000_000
 
 
 LEDGER_SCHEMA = T.StructType(
@@ -327,7 +310,7 @@ class CrawlEngine:
         pages_df: DataFrame | None,
         robots_df: DataFrame,
         baseline_df: DataFrame | None = None,
-        fetcher: Callable[[DataFrame], DataFrame] | None = None,
+        fetcher: Callable | None = None,
         sitemaps_df: DataFrame | None = None,
         headers_df: DataFrame | None = None,
     ):
@@ -337,23 +320,17 @@ class CrawlEngine:
         ledger_b generation flip of CrawlerEntryLedger.java:619-658).
         Build it with ``load_baseline(spark, prev_workdir)``.
 
-        ``fetcher``: optional fetch transform (batch DF with ``url`` ->
-        same DF + http_status/html/redirect_to). When given, fetching
-        runs inside the batch's own tasks (the real-HTTP shape); when
-        None, ``pages_df`` is joined instead."""
+        ``fetcher``: optional fetch generator (iterator of pandas
+        frames with ``url`` -> the same frames + http_status/html/
+        redirect_to, e.g. ``webgen.make_fetcher``). When given,
+        fetching runs inside the batch's own tasks (the real-HTTP
+        shape); when None, ``pages_df`` is joined instead."""
         self.spark = spark
         self.workdir = workdir
         self.cfg = cfg
         self.baseline = baseline_df.cache() if baseline_df is not None else None
-        # memoized "is the baseline driver-safe to broadcast" verdict
-        # (capped count on first use — see _baseline_hint)
-        self._baseline_small: bool | None = None
-        # host-keyed dim strategies (host_dim_broadcast_max_rows):
-        # delays/presence are static per run -> memoized once;
-        # host_state grows monotonically -> ratcheted per superstep
-        # (re-counted while small, permanently large once over cap)
-        self._delays_small: bool | None = None
-        self._presence_small: bool | None = None
+        # memoized broadcast verdicts of the static dims (_broadcastable)
+        self._dim_fits: dict[str, bool] = {}
         # UrlNormalizerStage slot: the fused default pipeline unless
         # the config names its own op list (GenericUrlNormalizer
         # analog — functions/urlnorm.py; oracle builds the identical
@@ -368,7 +345,6 @@ class CrawlEngine:
                 cfg.url_replacements,
                 cfg.url_ip_resolver,
             )
-        self._host_state_big = False
         self._orphans_done = baseline_df is None
         os.makedirs(workdir, exist_ok=True)
         self.fetcher = fetcher
@@ -426,20 +402,8 @@ class CrawlEngine:
         self.delays = host_delays(self.rules).cache()
         self._robots_udf = None
         if cfg.honor_robots:
-            bc = cfg.robots_broadcast
-            if bc is None:
-                # auto strategy: broadcast only a driver-safe rule dim;
-                # beyond the cap the distributed dim-join path runs
-                # (one count action at init, never O(hosts) collected)
-                bc = (
-                    self.rules.limit(
-                        cfg.robots_broadcast_max_rules + 1
-                    ).count()
-                    <= cfg.robots_broadcast_max_rules
-                )
-            if bc:
-                rows = self.rules.select("host", "pattern", "allow").collect()
-                self._robots_udf = make_robots_verdict_udf(spark, rows)
+            rows = self.rules.select("host", "pattern", "allow").collect()
+            self._robots_udf = make_robots_verdict_udf(spark, rows)
         self.levels = AppendTable(
             spark, os.path.join(workdir, "ledger_levels"), schema=LEDGER_SCHEMA
         )
@@ -589,50 +553,27 @@ class CrawlEngine:
             "true" if rows > AQE_MIN_ROWS else "false",
         )
 
-    def _baseline_hint(self, proj: DataFrame) -> DataFrame:
-        """Broadcast a baseline projection only while the baseline is
-        counted driver-safe (one capped count, memoized — the same
-        auto strategy as robots_broadcast). The baseline is O(prior
-        crawl): at the 10^10-URL tier a forced broadcast is an OOM,
-        not a plan choice, so beyond the cap the join goes unhinted
-        and Catalyst/AQE pick shuffle-hash / sort-merge."""
-        if self._baseline_small is None:
-            cap = self.cfg.baseline_broadcast_max_rows
-            self._baseline_small = (
-                self.baseline.limit(cap + 1).count() <= cap
+    def _broadcastable(self, dim: str, df: DataFrame | None = None) -> bool:
+        """Is ``dim`` driver-safe to broadcast into its join (at most
+        BROADCAST_MAX_ROWS rows)? Beyond the cap the join goes unhinted
+        and Catalyst/AQE pick shuffle-hash / sort-merge: at the
+        10^10-URL tier a forced O(hosts) or O(prior crawl) broadcast is
+        an OOM, not a plan choice.
+
+        ``host_state`` holds one row per scope key of a fetched URL, and
+        every fetched URL was first a ledger row, so the ledger row
+        count the driver already holds bounds it: no job, and the
+        verdict ratchets off as the ledger grows. The other dims
+        (``baseline``, crawl ``delays``, sitemap ``presence``) are
+        static per run: one capped count of ``df`` on first use,
+        memoized by name."""
+        if dim == "host_state":
+            return self._ledger_rows <= BROADCAST_MAX_ROWS
+        if dim not in self._dim_fits:
+            self._dim_fits[dim] = (
+                df.limit(BROADCAST_MAX_ROWS + 1).count() <= BROADCAST_MAX_ROWS
             )
-        return F.broadcast(proj) if self._baseline_small else proj
-
-    def _dim_small(self, df: DataFrame, cap: int) -> bool:
-        """One capped count: is this dim driver-safe to broadcast?
-        limit(cap+1) bounds the scan — never O(dim) driver work."""
-        return df.limit(cap + 1).count() <= cap
-
-    def _delays_broadcastable(self) -> bool:
-        """Crawl-delay dim (O(hosts with robots rules)) — static per
-        run, counted once."""
-        if self._delays_small is None:
-            self._delays_small = self._dim_small(
-                self.delays, self.cfg.host_dim_broadcast_max_rows
-            )
-        return self._delays_small
-
-    def _host_state_broadcastable(self, host_state) -> bool:
-        """Politeness last-sched state (O(distinct hosts ever seen)) —
-        grows monotonically, so the verdict is a ratchet: re-counted
-        per superstep while small (host_state is a localCheckpoint in
-        memory — the capped count is cheap), permanently non-broadcast
-        once over the cap."""
-        if host_state is None:
-            return True
-        if self._host_state_big:
-            return False
-        if not self._dim_small(
-            host_state, self.cfg.host_dim_broadcast_max_rows
-        ):
-            self._host_state_big = True
-            return False
-        return True
+        return self._dim_fits[dim]
 
     def _ledger_df(self) -> DataFrame:
         """All URL-seen rows (every level part; a QUEUED row and its
@@ -732,13 +673,13 @@ class CrawlEngine:
     def _fetch_parse(self, sched: DataFrame) -> DataFrame:
         """Fetch + parse the scheduled batch.
 
-        Preferred shape: the fetcher's generator form composed with the
-        parse transformer into ONE mapInPandas — bodies are fetched and
+        With a fetcher, its generator is composed with the parse
+        transformer into ONE mapInPandas — bodies are fetched and
         parsed in the same Python worker pass and only the distilled
         parse fields (canonical/robots-meta/checksum/links) return to
-        the JVM. Fallbacks: a DataFrame-level fetcher, or the
-        ``pages``-table join (MockWebsite analog), each followed by the
-        parse transformer (html crosses once, then is dropped).
+        the JVM. Without one, the ``pages``-table join (MockWebsite
+        analog) is followed by the parse transformer (html crosses
+        once, then is dropped).
         """
         # a QUEUED ledger row carries a null http_status placeholder;
         # the fetch slot produces the real one — drop the placeholder
@@ -782,17 +723,14 @@ class CrawlEngine:
             ]
             + list(PARSE_FIELDS.fields)
         )
-        gen = getattr(self.fetcher, "batches", None)
-        if gen is not None:
+        fetch = self.fetcher
+        if fetch is not None:
 
             def composed(batches):
-                return parse(gen(batches))
+                return parse(fetch(batches))
 
             return sched.mapInPandas(composed, schema=out_schema)
-        if self.fetcher is not None:
-            fetched = self.fetcher(sched)
-        else:
-            fetched = sched.join(self.pages, "url", "left")
+        fetched = sched.join(self.pages, "url", "left")
         return fetched.mapInPandas(parse, schema=out_schema)
 
     def _checksum_registry(self) -> DataFrame:
@@ -1003,7 +941,7 @@ class CrawlEngine:
         pages_df: DataFrame | None,
         robots_df: DataFrame,
         baseline_df: DataFrame | None = None,
-        fetcher: Callable[[DataFrame], DataFrame] | None = None,
+        fetcher: Callable | None = None,
         sitemaps_df: DataFrame | None = None,
     ) -> "CrawlEngine":
         """Rebuild engine state from the last committed checkpoint.
@@ -1091,11 +1029,9 @@ class CrawlEngine:
         returns (new_rows, counts_df, cleanup) so the caller can fold
         the counts into a single shared collect action."""
         cfg = self.cfg
-        qtick = _Tick(self.superstep)
         self._set_shuffle(n_cand)
         caches: list[DataFrame] = []
         c = self._evaluate_candidates(cand, ledger, n_cand, caches)
-        qtick("qp:eval_built")
 
         # SitemapResolution (web/.../queue/stages/SitemapResolutionStage
         # .java:63-231): the first QUEUED candidate of a never-seen host
@@ -1157,7 +1093,6 @@ class CrawlEngine:
                 n_part=self._n_part(n_cand),
                 first_col_bounds=self._level_bounds,
             )
-        qtick("qp:seq_assigned")
         if cfg.record_url_variants:
             # reference-trail variant marking (ProcessFinalize.java:
             # 205-219): raw spellings that normalized to this url —
@@ -1213,7 +1148,6 @@ class CrawlEngine:
         # a one-node plan.
         new_rows = new_rows.localCheckpoint(eager=True)
 
-        qtick("qp:plan_built")
         counts_df = new_rows.groupBy("status", "outcome").count()
 
         def cleanup():
@@ -1230,7 +1164,6 @@ class CrawlEngine:
             (r["status"], r["outcome"]): r["count"]
             for r in counts_df.collect()
         }
-        qtick("qp:materialize+count")
         stats = self._queue_stats(by_status, n_cand)
         cleanup()
         return new_rows, stats
@@ -1276,15 +1209,8 @@ class CrawlEngine:
             not self._bloom_synced
             and self._ledger_rows >= cfg.bloom_prefilter_min_ledger
         ):
-            _t0 = time.time()
             self.bloom.add_df(ledger_keys)
             self._bloom_synced = True
-            if _TIMING:
-                print(
-                    f"[timing] ss={self.superstep} bloom_sync: "
-                    f"{time.time() - _t0:.2f}s",
-                    flush=True,
-                )
         # pin BOTH join sides' shuffle width explicitly (repartition-by-
         # num is AQE-coalesce-exempt and co-partitions the join, so no
         # extra exchange): the level's slim keys compress far below the
@@ -1350,11 +1276,10 @@ class CrawlEngine:
         # TOO_DEEP/FILTERED precede robots in the stage ladder, so rows
         # they already rejected never need a pattern match — mask them
         # out of the robots evaluation (null host short-circuits the
-        # UDF; the join path filters its probe side). On a leaf level
-        # ~all candidates are TOO_DEEP: this turns the level's robots
-        # cost from O(candidates) to O(live).
+        # UDF). On a leaf level ~all candidates are TOO_DEEP: this turns
+        # the level's robots cost from O(candidates) to O(live).
         live = ~too_deep & ~filtered
-        if cfg.honor_robots and self._robots_udf is not None:
+        if cfg.honor_robots:
             c = c.withColumn(
                 "robots_ok",
                 self._robots_udf(
@@ -1362,14 +1287,6 @@ class CrawlEngine:
                     F.when(live, F.col("host")),
                 ),
             )
-        elif cfg.honor_robots:
-            verdict = robots_verdict(
-                c.filter(live).select("url", "host"), self.rules
-            )
-            # left join: masked rows get null robots_ok, which the
-            # outcome ladder coalesces to "allowed" (their outcome is
-            # already decided by an earlier rung)
-            c = c.join(verdict, "url", "left")
         else:
             c = c.withColumn("robots_ok", F.lit(True))
 
@@ -1377,7 +1294,7 @@ class CrawlEngine:
             "outcome",
             F.when(too_deep, "TOO_DEEP")
             .when(filtered, "FILTERED")
-            .when(~F.coalesce(F.col("robots_ok"), F.lit(True)), "ROBOTS_TXT")
+            .when(~F.col("robots_ok"), "ROBOTS_TXT")
             .otherwise(F.lit(None).cast("string")),
         ).withColumn(
             "status",
@@ -1551,7 +1468,6 @@ class CrawlEngine:
             and self._max_sched_seen >= cfg.max_crawl_duration_ms
         ):
             return None
-        tick = _Tick(self.superstep)
         self._cur_part = f"{self.superstep:06d}"
         self._raise_failed()
         # land the previous superstep's deferred pool folds BEFORE any
@@ -1617,7 +1533,9 @@ class CrawlEngine:
                 _bcol("sm_lastmod").alias("base_sm_lastmod"),
                 _bcol("sm_changefreq").alias("base_sm_changefreq"),
             )
-            b2 = batch.join(self._baseline_hint(bsched), "url", "left")
+            if self._broadcastable("baseline", self.baseline):
+                bsched = F.broadcast(bsched)
+            b2 = batch.join(bsched, "url", "left")
             is_prem = F.col("base_sched").isNotNull() & ~_recrawlable_col(
                 cfg
             )
@@ -1643,8 +1561,8 @@ class CrawlEngine:
             patterns=cfg.delay_patterns,
             scope=cfg.delay_scope,
             n_threads=cfg.delay_threads,
-            delays_broadcast=self._delays_broadcastable(),
-            state_broadcast=self._host_state_broadcastable(host_state),
+            delays_broadcast=self._broadcastable("delays", self.delays),
+            state_broadcast=self._broadcastable("host_state"),
         )
 
         # -- metadata checksum band (MetadataChecksumStage + the HEAD
@@ -1689,9 +1607,9 @@ class CrawlEngine:
                     base_meta = self.baseline.select(
                         "url", F.col("meta_ck").alias("base_meta_head")
                     )
-                    hj = hj.join(
-                        self._baseline_hint(base_meta), "url", "left"
-                    )
+                    if self._broadcastable("baseline", self.baseline):
+                        base_meta = F.broadcast(base_meta)
+                    hj = hj.join(base_meta, "url", "left")
                     unmod_cond = (
                         F.col("base_meta_head").isNotNull()
                         & (F.col("meta_ck") == F.col("base_meta_head"))
@@ -1797,14 +1715,8 @@ class CrawlEngine:
             presence = self.sitemaps.select("host").distinct().withColumn(
                 "__has_sm", F.lit(True)
             )
-            # presence is O(hosts with sitemaps): broadcast only while
-            # counted driver-safe (static per run — memoized once);
-            # beyond the cap the join goes unhinted.
-            if self._presence_small is None:
-                self._presence_small = self._dim_small(
-                    presence, self.cfg.host_dim_broadcast_max_rows
-                )
-            if self._presence_small:
+            # presence is O(hosts with sitemaps)
+            if self._broadcastable("presence", presence):
                 presence = F.broadcast(presence)
             parsed = parsed.join(presence, "host", "left")
         if (
@@ -2117,7 +2029,6 @@ class CrawlEngine:
         # actions optimizing a one-node plan. Same pattern the frontier
         # and ledger hand-offs already use.
         parsed = parsed.localCheckpoint(eager=True)
-        tick("parse_ckpt")
 
         # ---- outputs of this level ----
         processed = parsed.select(
@@ -2397,7 +2308,6 @@ class CrawlEngine:
         }
         qstats = self._queue_stats(by_status, n_est)
         qp_cleanup()
-        tick("parse+agg+queue")
         out_counts = {r["outcome"]: r["n"] for r in agg_rows}
         n_links = sum(r["n_links"] for r in agg_rows)
         n_links_all = sum(r["n_links_all"] for r in agg_rows)
@@ -2584,7 +2494,6 @@ class CrawlEngine:
             except Exception:
                 pass
         self._host_state_mem = new_state
-        tick("mem_state")
 
         self._record_metrics(stats, part)
         self._frontier_part = part
@@ -2626,7 +2535,6 @@ class CrawlEngine:
             self._write_ckpt(ckpt_state)
 
         self._submit_commit(commit)
-        tick("commit_submit")
         return st
 
     def _inject_orphans(self) -> None:

@@ -241,25 +241,8 @@ def http_fetch_batches(cfg: HttpFetcherConfig | None = None):
 
 def make_http_fetcher(cfg: HttpFetcherConfig | None = None):
     """Engine ``fetcher`` slot over real sockets (mirror of
-    ``webgen.make_fetcher``; carries ``.batches`` so the engine fuses
-    fetch+parse into a single mapInPandas pass)."""
-    g = http_fetch_batches(cfg)
-
-    def fetch(batch_df):
-        schema = (
-            batch_df.sparkSession.createDataFrame([], batch_df.schema)
-            .selectExpr(
-                "*",
-                "cast(null as int) http_status",
-                "cast(null as string) html",
-                "cast(null as string) redirect_to",
-            )
-            .schema
-        )
-        return batch_df.mapInPandas(g, schema=schema)
-
-    fetch.batches = g
-    return fetch
+    ``webgen.make_fetcher``): the ``http_fetch_batches`` generator."""
+    return http_fetch_batches(cfg)
 
 
 def fetch_robots_df(spark, roots_df, cfg: HttpFetcherConfig | None = None):

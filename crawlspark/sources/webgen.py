@@ -18,9 +18,9 @@ with identical content:
 
 Fetching in the engine has two slots (plans/superstep.py): joining
 candidates against a materialized ``pages`` table, or — the shape a
-real HTTP fetcher takes — ``make_fetcher(params)``: a ``mapInPandas``
-transform that resolves each URL's response directly in the fetch
-task, no pages scan, no join shuffle.
+real HTTP fetcher takes — ``make_fetcher(params)``: a per-batch
+generator the engine runs inside ``mapInPandas``, resolving each URL's
+response directly in the fetch task, no pages scan, no join shuffle.
 """
 
 from __future__ import annotations
@@ -501,28 +501,10 @@ def fetch_batches(p: SiteParams, retries: int = 0):
 
 
 def make_fetcher(p: SiteParams, retries: int = 0):
-    """Engine ``fetcher`` slot: batch DataFrame -> batch + response
-    columns via mapInPandas (one Arrow batch per politeness partition,
-    zero shuffle). Carries ``.batches`` — the generator form — which
-    the engine prefers so it can fuse fetch+parse into a single pass."""
-
-    g = fetch_batches(p, retries=retries)
-
-    def fetch(batch_df):
-        schema = (
-            batch_df.sparkSession.createDataFrame([], batch_df.schema)
-            .selectExpr(
-                "*",
-                "cast(null as int) http_status",
-                "cast(null as string) html",
-                "cast(null as string) redirect_to",
-            )
-            .schema
-        )
-        return batch_df.mapInPandas(g, schema=schema)
-
-    fetch.batches = g
-    return fetch
+    """Engine ``fetcher`` slot: the ``fetch_batches`` generator, which
+    the engine fuses with the parse transformer into one mapInPandas
+    pass (one Arrow batch per politeness partition, zero shuffle)."""
+    return fetch_batches(p, retries=retries)
 
 
 # ---------------------------------------------------------------------------

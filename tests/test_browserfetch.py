@@ -238,10 +238,9 @@ def test_chain_routing_and_fallthrough():
     chained = chain_fetchers(
         [(lambda u: True, flaky), (lambda u: True, solid)]
     )
-    gen = chained.batches
     import pandas as pd
 
-    out = list(gen(iter([pd.DataFrame({"url": ["http://x/"]})])))[0]
+    out = list(chained(iter([pd.DataFrame({"url": ["http://x/"]})])))[0]
     # bad response from the first fetcher fell through to the second
     assert seen == ["flaky", "solid"]
     assert out["http_status"].tolist() == [200]
@@ -249,7 +248,7 @@ def test_chain_routing_and_fallthrough():
     # nobody accepts -> unfetched row (engine error ladder handles it)
     none = chain_fetchers([(lambda u: False, solid)])
     out2 = list(
-        none.batches(iter([pd.DataFrame({"url": ["http://x/"]})]))
+        none(iter([pd.DataFrame({"url": ["http://x/"]})]))
     )[0]
     assert out2["http_status"].isna().all()
 

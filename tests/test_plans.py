@@ -76,15 +76,15 @@ def test_minhash_dup_pairs_single_scan(spark):
         spark.catalog.clearCache()
 
 
-def test_baseline_broadcast_auto_strategy(spark, tmp_path):
+def test_baseline_broadcast_auto_strategy(spark, tmp_path, monkeypatch):
     """Baseline projections are broadcast only while the baseline is
-    counted driver-safe: above cfg.baseline_broadcast_max_rows the
-    joins go unhinted (the baseline is O(prior crawl) — a forced
-    broadcast at the 10^10 tier is an OOM, not a plan choice)."""
+    counted driver-safe: above superstep.BROADCAST_MAX_ROWS the joins
+    go unhinted (the baseline is O(prior crawl) — a forced broadcast
+    at the 10^10 tier is an OOM, not a plan choice)."""
     from pyspark.sql import functions as F
 
     from crawlspark.config import CrawlConfig
-    from crawlspark.plans.superstep import CrawlEngine
+    from crawlspark.plans import superstep
 
     pages = spark.createDataFrame(
         [("http://h.x/", 200, "<html></html>", None)],
@@ -101,35 +101,39 @@ def test_baseline_broadcast_auto_strategy(spark, tmp_path):
     )
 
     def plan_of(cap):
-        eng = CrawlEngine(
+        monkeypatch.setattr(superstep, "BROADCAST_MAX_ROWS", cap)
+        eng = superstep.CrawlEngine(
             spark,
             str(tmp_path / f"b{cap}"),
-            CrawlConfig(baseline_broadcast_max_rows=cap),
+            CrawlConfig(),
             pages,
             robots,
             baseline_df=baseline,
         )
+        fits = eng._broadcastable("baseline", eng.baseline)
         proj = eng.baseline.select("url", "checksum")
-        hinted = eng._baseline_hint(proj)
+        if fits:
+            proj = F.broadcast(proj)
         probe = spark.range(100).select(
             F.concat(F.lit("http://h.x/p"), F.col("id")).alias("url")
         )
+        qe = probe.join(proj, "url", "left")._jdf.queryExecution()
         return (
-            eng._baseline_small,
-            probe.join(hinted, "url", "left")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString(),
+            fits,
+            qe.optimizedPlan().toString(),
+            qe.executedPlan().toString(),
         )
 
-    small, plan_small = plan_of(1000)  # 10 rows <= cap -> broadcast
+    small, logical_small, plan_small = plan_of(1000)  # 10 rows <= cap
     assert small is True
+    assert "strategy=broadcast" in logical_small
     assert "BroadcastHashJoin" in plan_small
-    big, plan_big = plan_of(5)  # 10 rows > cap -> unhinted
+    big, logical_big, _ = plan_of(5)  # 10 rows > cap -> unhinted
     assert big is False
     # Catalyst may still pick broadcast for a genuinely tiny frame via
     # autoBroadcastJoinThreshold — what must be gone is the FORCED
-    # hint; assert on the optimized logical plan instead
+    # hint, so assert on the optimized logical plan
+    assert "strategy=broadcast" not in logical_big, logical_big
 
 
 def test_lsh_signature_plan_has_no_per_row_hash(spark):
@@ -200,12 +204,14 @@ def test_host_dim_broadcast_auto_strategy(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_engine_host_state_ratchet(spark, tmp_path):
-    """CrawlEngine's host_state verdict ratchets: with a 0-row cap the
-    first superstep flips it to permanently-large (never broadcast
-    again, never re-counted) and the crawl result is unchanged."""
+def test_engine_host_state_ratchet(spark, tmp_path, monkeypatch):
+    """CrawlEngine broadcasts host_state only while the ledger row
+    count (its upper bound) is within superstep.BROADCAST_MAX_ROWS:
+    with the cap below the crawl's ledger size the superstep that
+    carries host_state joins it unhinted, and the crawl result is
+    unchanged."""
     from crawlspark.config import CrawlConfig
-    from crawlspark.plans.superstep import CrawlEngine
+    from crawlspark.plans import superstep
 
     def page(u, links):
         html = "<html><body>" + "".join(
@@ -223,11 +229,23 @@ def test_engine_host_state_ratchet(spark, tmp_path):
     )
     robots = spark.createDataFrame([("h.x", None)], "host string, body string")
 
+    calls = []
+    real_schedule = superstep.schedule_hosts
+
+    def spy(batch, delays, host_state, *args, **kw):
+        if host_state is not None:
+            calls.append(kw["state_broadcast"])
+        return real_schedule(batch, delays, host_state, *args, **kw)
+
+    monkeypatch.setattr(superstep, "schedule_hosts", spy)
+
     def crawl(cap, tag):
-        eng = CrawlEngine(
+        monkeypatch.setattr(superstep, "BROADCAST_MAX_ROWS", cap)
+        calls.clear()
+        eng = superstep.CrawlEngine(
             spark,
             str(tmp_path / tag),
-            CrawlConfig(max_depth=2, host_dim_broadcast_max_rows=cap),
+            CrawlConfig(max_depth=2),
             pages,
             robots,
         )
@@ -237,13 +255,14 @@ def test_engine_host_state_ratchet(spark, tmp_path):
             (r["url"], r["scheduled_at_ms"])
             for r in eng.fetch_log().orderBy("seq").collect()
         ]
-        return eng, log
+        return list(calls), log
 
-    eng_big, log_big = crawl(2_000_000, "hs_big")
-    assert eng_big._host_state_big is False
-    eng_zero, log_zero = crawl(0, "hs_zero")
-    assert eng_zero._host_state_big is True
-    assert log_big == log_zero
+    bc_big, log_big = crawl(2_000_000, "hs_big")
+    assert bc_big and all(bc_big)
+    # 3 ledger rows (seed + 2 links) > cap 1
+    bc_small, log_small = crawl(1, "hs_small")
+    assert bc_small and not any(bc_small)
+    assert log_big == log_small
 
 
 def test_sampling_ops_are_shuffle_free_projections(spark):
